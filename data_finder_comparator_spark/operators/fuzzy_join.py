@@ -27,9 +27,12 @@ Scale design (this is where the Spark version stops being a loop):
   ``levenshtein(a, b, t)`` (Spark >= 3.5) which early-exits the DP at
   O(len * t) instead of O(len^2).
 * Phase 2 (the ``poor`` fallback — a full-candidate global argmin, like
-  the reference's rescan at main.py:222-228 but ONE extra job over the
-  minority of probes with no within-threshold match, not a 2x recompute
-  for every probe).
+  the reference's rescan at main.py:222-228, but only over the minority
+  of probes with no within-threshold match, not a 2x recompute for
+  every probe). It is the k=1, all-ties case of the escalating
+  length-band ladder (``_escalating_topk``) that also computes
+  ``topk_fuzzy_join``: one routine widens the band until every probe
+  has its answer.
 * ``strategy="broadcast"`` broadcasts the candidate side (no shuffle —
   right whenever candidates fit in memory, the reference's regime).
   ``strategy="band"`` turns the length-band predicate into an
@@ -40,21 +43,26 @@ Scale design (this is where the Spark version stops being a loop):
   the 100 TB regime, sub-quadratic even when every string has the
   same length. All three produce identical results.
 
+Both joins take ``cand`` as a DataFrame or as the ``PreparedCandidates``
+that ``prepare_candidates`` returns (normalization and stats computed
+once, for repeated calls against a static candidate table).
+
 Output: one row per (probe, candidate, tier) membership —
 ``probe_id, probe, cand_id, cand, dist, tier``.
 """
 
 from __future__ import annotations
 
-import os as _os
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 from ..functions.normalize import norm_key
 from ..partitioning import fanout_partitions as _fanout_partitions
 
 OUT_COLS = ["probe_id", "probe", "cand_id", "cand", "dist", "tier"]
+_TOPK_COLS = ["probe_id", "probe", "cand_id", "cand", "dist", "rnk"]
 
 
 def _prep(df: DataFrame, id_col: str, val_col: str, out_id: str, out_val: str, nrm: str) -> DataFrame:
@@ -65,25 +73,44 @@ def _prep(df: DataFrame, id_col: str, val_col: str, out_id: str, out_val: str, n
     )
 
 
+def _matchable(df: DataFrame, nrm: str, registry: list | None):
+    """``(rows, count, max length)`` of ``df``'s rows with a non-null
+    normalized key ``nrm``: the filtered frame is persisted so later
+    rounds don't rescan the source, and both stats come from ONE fused
+    job. Null-normalized keys are defined out of matching (the
+    reference would crash on NaN); without the filter they would never
+    resolve and force every escalation round."""
+    rows = df.filter(F.col(nrm).isNotNull()).persist()
+    # register BEFORE the stats action: a failure in that job must
+    # leave the persisted frame findable by the caller's cleanup path,
+    # or it pins a cache-manager entry for the process lifetime (r13
+    # review finding — fuzzy_match_stream's except-path found an empty
+    # registry when .first() raised)
+    if registry is not None:
+        registry.append(rows)
+    n, max_len = rows.agg(F.count(F.lit(1)), F.max(F.length(nrm))).first()
+    return rows, n, max_len
+
+
+@dataclass(frozen=True)
 class PreparedCandidates:
-    """Candidate-side state precomputed ONCE for repeated tiered joins
-    (the one-call-per-micro-batch streaming regime): the prepped +
-    persisted candidate frame, its null-filtered matchable subset, and
-    the fused count / max-normalized-length stats the escalation
-    fallback needs. Without this, every epoch re-runs the candidate
-    normalization scan plus one stats aggregation job against a table
-    that is STATIC across the stream's lifetime.
+    """Candidate-side state precomputed ONCE for repeated joins (the
+    one-call-per-micro-batch streaming regime): the prepped + persisted
+    candidate frame, its null-filtered matchable subset, and the fused
+    count / max-normalized-length stats the escalation ladder needs.
+    Without this, every epoch re-runs the candidate normalization scan
+    plus one stats aggregation job against a table that is STATIC
+    across the stream's lifetime.
 
     Lifetime: both persisted frames are appended to ``cache_registry``
     (when given) — the caller unpersists them after the stream drains,
     exactly like ``tiered_fuzzy_join``'s own registry contract.
     """
 
-    def __init__(self, c: DataFrame, matchable: DataFrame, n_cand: int, max_c: int | None):
-        self.c = c
-        self.matchable = matchable
-        self.n_cand = n_cand
-        self.max_c = max_c
+    c: DataFrame
+    matchable: DataFrame
+    n_cand: int
+    max_c: int | None
 
 
 def prepare_candidates(
@@ -93,50 +120,43 @@ def prepare_candidates(
     cache_registry: list | None = None,
 ) -> PreparedCandidates:
     """Normalize + persist the candidate side and compute the stats the
-    ``poor``-fallback escalation needs, once, for reuse across many
-    ``tiered_fuzzy_join`` calls (pass the result as ``prepared=``)."""
+    escalation ladder needs, once, for reuse across many
+    ``tiered_fuzzy_join`` / ``topk_fuzzy_join`` calls (pass the result
+    as their ``cand``)."""
     c = _prep(cand, cand_id, cand_val, "cand_id", "cand", "_nc").persist()
-    matchable = c.filter(F.col("_nc").isNotNull()).persist()
-    # register BEFORE the stats action: a failure in that job must
-    # leave both persisted frames findable by the caller's cleanup
-    # path, or they pin cache-manager entries for the process lifetime
-    # (r13 review finding — fuzzy_match_stream's except-path found an
-    # empty registry when .first() raised)
     if cache_registry is not None:
-        cache_registry.extend([c, matchable])
-    n_cand, max_c = matchable.agg(
-        F.count(F.lit(1)), F.max(F.length("_nc"))
-    ).first()
-    return PreparedCandidates(c, matchable, n_cand, max_c)
+        cache_registry.append(c)
+    return PreparedCandidates(c, *_matchable(c, "_nc", cache_registry))
 
 
 def tiered_fuzzy_join(
     probe: DataFrame,
-    cand: DataFrame,
+    cand: DataFrame | PreparedCandidates,
     probe_id: str = "probe_id",
     probe_val: str = "probe",
     cand_id: str = "cand_id",
     cand_val: str = "cand",
     threshold: int = 3,
     strategy: str = "broadcast",
-    cache_intermediate: bool = True,
     cache_registry: list | None = None,
-    prepared: PreparedCandidates | None = None,
     dedup_strings: bool | str = False,
 ) -> DataFrame:
     """Score every probe against the candidate set and classify matches
     into exact / best / potential / poor tiers (reference semantics).
 
-    probe must have (probe_id, probe_val); cand (cand_id, cand_val).
-    Returns OUT_COLS with ``dist`` as long and ``tier`` as string.
+    probe must have (probe_id, probe_val); cand (cand_id, cand_val), or
+    is the ``PreparedCandidates`` of ``prepare_candidates`` — which
+    skips the per-call candidate normalization AND the ladder's
+    candidate stats job (the hot path for repeated calls against a
+    static candidate table). Returns OUT_COLS with ``dist`` as long and
+    ``tier`` as string.
 
-    ``cache_intermediate=False`` skips the phase-1 persist entirely
-    (the phase-1 subtree is then recomputed by each of its three
-    consumers). Repeated callers (e.g. one call per streaming
-    micro-batch) should instead pass ``cache_registry=[]``: persisted
-    DataFrames are appended to it, and the caller unpersists them right
-    after its action — keeping the single-evaluation benefit without
-    accumulating cached blocks across calls.
+    Phase 1 is persisted (it has three consumers). Repeated callers
+    (e.g. one call per streaming micro-batch) should pass
+    ``cache_registry=[]``: persisted DataFrames are appended to it, and
+    the caller unpersists them right after its action — keeping the
+    single-evaluation benefit without accumulating cached blocks across
+    calls.
 
     ``dedup_strings`` (qgram strategy only) runs candidate generation
     AND the DP once per distinct (normalized-probe, normalized-cand)
@@ -165,12 +185,8 @@ def tiered_fuzzy_join(
     """
     t = threshold
     p = _prep(probe, probe_id, probe_val, "probe_id", "probe", "_nq")
-    # ``prepared`` (see prepare_candidates) skips the per-call candidate
-    # normalization AND the escalation fallback's candidate stats job —
-    # the hot path for repeated calls against a static candidate table
-    c = prepared.c if prepared is not None else _prep(
-        cand, cand_id, cand_val, "cand_id", "cand", "_nc"
-    )
+    prepared = cand if isinstance(cand, PreparedCandidates) else None
+    c = prepared.c if prepared else _prep(cand, cand_id, cand_val, "cand_id", "cand", "_nc")
 
     # Dense micro-batch path: when the candidate count is KNOWN (stats
     # precomputed) and broadcast-small, the banded two-phase plan is all
@@ -338,10 +354,9 @@ def tiered_fuzzy_join(
     # consumed twice (tier classification + matched-probe anti-join);
     # persist so the banded scoring pass runs once, not twice — at
     # cluster scale this would be a checkpoint/exchange reuse
-    if cache_intermediate:
-        within = within.persist()
-        if cache_registry is not None:
-            cache_registry.append(within)
+    within = within.persist()
+    if cache_registry is not None:
+        cache_registry.append(within)
 
     w = Window.partitionBy("probe_id")
     within = within.withColumn(
@@ -365,10 +380,11 @@ def tiered_fuzzy_join(
     #   the reference's exact∩poor overlap, with NO rescan.
     # * probe has NO within-band pair at all — the global min exceeds t
     #   and genuinely requires a full-candidate argmin. Resolved by
-    #   escalating band widening (below), NOT a |P|x|C| cross join: in
-    #   adversarial inputs (probe set from a different catalog) ALL
-    #   probes fall through, and a cartesian there is the one plan that
-    #   cannot survive 100 TB.
+    #   escalating band widening (the ladder at k=1 ordered by dist
+    #   only, where rank() <= 1 is the all-ties argmin), NOT a |P|x|C|
+    #   cross join: in adversarial inputs (probe set from a different
+    #   catalog) ALL probes fall through, and a cartesian there is the
+    #   one plan that cannot survive 100 TB.
     poor_exact = (
         within.filter(F.col("min_pos").isNull())
         .withColumn("tier", F.lit("poor"))
@@ -376,9 +392,14 @@ def tiered_fuzzy_join(
     )
     seen = within.select("probe_id").distinct()
     unseen = p.join(seen, "probe_id", "left_anti")
-    poor_rescan = _global_argmin_escalating(
-        unseen, c, t, broadcast_cand=strategy == "broadcast", prepared=prepared
-    )
+    poor_rescan = _escalating_topk(
+        unseen,
+        prepared or c,
+        width=2 * t,
+        broadcast_cand=strategy == "broadcast",
+        order=("dist",),
+        k=1,
+    ).select(*OUT_COLS[:-1], F.lit("poor").alias("tier"))
 
     return tiers_within.unionByName(poor_exact).unionByName(poor_rescan)
 
@@ -387,22 +408,22 @@ def tiered_fuzzy_join(
 # any broadcast threshold, so the full cross product per micro-batch is
 # |batch| * n_cand <= |batch| * 4096 cheap JVM DP evaluations — the
 # same asymptotics as the reference's per-probe scan (main.py:197-230)
-# but vectorized and without per-call planning overhead. Env-tunable
-# like the union-find edge cap: deployments with longer strings (full
-# DP is O(len^2) per pair on far pairs) can lower it; ones with short
-# keys and bigger dimension tables can raise it. Measured envelope at
+# but vectorized and without per-call planning overhead. Longer strings
+# (full DP is O(len^2) per pair on far pairs) would want it lower,
+# short keys with bigger dimension tables higher. Measured envelope at
 # 4000 candidates (SCALE.md §8): dense wins 2.3x at 32-probe batches,
 # crosses over ~1000 probes/call, loses a bounded ~1.5x past it — so
 # the gate needs only the candidate count (batch size is unknowable at
-# plan time); large-batch callers simply don't pass ``prepared``.
-_DENSE_CAND_MAX = int(_os.environ.get("SPARK_GRAFT_DENSE_CANDS", "4096"))
+# plan time); large-batch callers simply pass a plain DataFrame as
+# ``cand`` instead of ``PreparedCandidates``.
+_DENSE_CAND_MAX = 4096
 
 # dedup_strings="auto" flips on when the product of probe-side and
 # candidate-side duplication factors (count / approx_count_distinct on
 # the normalized key) reaches this — the point where per-string-pair
 # work shrinks enough to clear the two extra distinct aggregations
 # (~10% at x1, 10.8x win at the x64 duplicate-heavy rung, SCALE.md).
-_DEDUP_AUTO_FACTOR = float(_os.environ.get("SPARK_GRAFT_DEDUP_AUTO_FACTOR", "4.0"))
+_DEDUP_AUTO_FACTOR = 4.0
 
 
 def _dense_tiers(p: DataFrame, c: DataFrame, t: int) -> DataFrame:
@@ -446,10 +467,7 @@ def _dense_tiers(p: DataFrame, c: DataFrame, t: int) -> DataFrame:
 # (by then tiny) remainder falls back to a broadcast nested-loop scan.
 _FALLBACK_MAX_ROUNDS = 8
 
-# Diagnostics: per-round progress of the escalation loop on stderr.
-_FALLBACK_DEBUG = bool(_os.environ.get("SPARK_GRAFT_FUZZY_DEBUG"))
-
-# Adaptive shortcut for the escalation loops: when the remaining-probe
+# Adaptive shortcut for the escalation ladder: when the remaining-probe
 # x candidate product is at most this many pairs, the exact final-width
 # round costs less than ONE doubling round's scheduling overhead — jump
 # straight to it. The plan stays a bucketed band equi-join (never a
@@ -480,272 +498,54 @@ def _bucketed_band_pairs(
     return joined.filter(F.abs(F.length("_nq") - F.length("_nc")) <= width)
 
 
-def _global_argmin_escalating(
-    unseen: DataFrame,
-    c: DataFrame,
-    t: int,
+def _escalating_topk(
+    probes: DataFrame,
+    cand: DataFrame | PreparedCandidates,
+    width: int,
     broadcast_cand: bool,
-    prepared: PreparedCandidates | None = None,
+    order: tuple[str, ...],
+    k: int,
 ) -> DataFrame:
-    """All-ties global argmin over the candidate set for each probe in
-    ``unseen``, via escalating band widths (2t, 4t, ...) instead of a
-    cartesian product.
+    """Exact top-k candidates per probe by ``order`` — rank() with ties —
+    over the whole candidate set, via escalating band widths instead of
+    a cartesian product. ``probes`` and ``cand`` are ``_prep``-ed frames
+    (``cand`` may also be ``PreparedCandidates``). Two callers:
+
+    * the ``poor`` fallback: k=1 ordered by ``dist`` only, so
+      ``rank() <= 1`` is the all-ties global argmin;
+    * ``topk_fuzzy_join``: ordered by (dist, cand_id).
 
     Correctness of each round at width W: scoring uses the threshold DP
     ``levenshtein(a, b, W)``, so every surviving pair has dist <= W,
-    while every candidate OUTSIDE the band has dist >= |len diff| > W.
-    Hence if a probe has any surviving pair, its global minimum d* is
-    among them, and all argmin ties satisfy |len diff| <= d* <= W — the
-    round emits the complete, exact tie set. Probes with no surviving
-    pair have global min > W and roll into the next (doubled) width.
-    Each round is a plain hash equi-join; the cross join survives only
-    as a broadcast nested-loop over the post-escalation remainder,
-    which is empty for any corpus whose lengths are within 2^8*t of a
-    candidate length.
+    while every candidate outside the band or rejected by the DP has
+    dist > W. So once a probe has >= k survivors, its k-th smallest
+    distance d_k <= W < any non-survivor's — the round's top-k (all
+    ties included) is the global top-k, finalized. At k=1 any survivor
+    resolves its probe. Probes with fewer than k survivors roll into the
+    doubled width; the round at W >= the max normalized length covers
+    every pair with a full DP, so every probe resolves (probes with < k
+    candidates total emit all of them there). Each round is a plain hash
+    equi-join on a length bucket; the cross join survives only as a
+    broadcast nested-loop over the post-escalation remainder, which is
+    empty for any corpus whose lengths are within 2^8 times the start
+    width of a candidate length.
 
+    Returns probe_id, probe, cand_id, cand, dist (long), rnk (long).
     Contract note: the escalation is iterative, so BUILDING the result
-    runs Spark jobs (common case: one short job proving ``unseen`` is
-    empty; the phase-1 work it materializes is persisted and reused by
-    the caller's action). The returned rows are localCheckpoint-ed —
-    tiny (argmin ties of fallback probes only) — so every intermediate
-    cache this function creates is released before it returns.
+    runs Spark jobs (common case: one short job proving ``probes`` is
+    empty; phase-1 work it materializes is persisted and reused by the
+    caller's action). The returned rows are localCheckpoint-ed, so every
+    intermediate cache this function creates is released before it
+    returns.
     """
-    spark = unseen.sparkSession
+    spark = probes.sparkSession
     from pyspark.sql import types as T
 
+    c = cand.c if isinstance(cand, PreparedCandidates) else cand
     schema = T.StructType(
         [
-            unseen.schema["probe_id"],
-            unseen.schema["probe"],
-            c.schema["cand_id"],
-            c.schema["cand"],
-            T.StructField("dist", T.LongType()),
-            T.StructField("tier", T.StringType()),
-        ]
-    )
-    empty = spark.createDataFrame([], schema)
-
-    internal: list[DataFrame] = []
-
-    def _track(df: DataFrame) -> DataFrame:
-        df = df.persist()
-        internal.append(df)
-        return df
-
-    def _release() -> None:
-        for df in internal:
-            df.unpersist()
-        internal.clear()
-
-    try:
-        # null-normalized probes are defined out of matching entirely
-        # (the reference would crash on NaN); without this they would
-        # never resolve and force every escalation round. Same for
-        # null-normalized candidates: if none is matchable, no probe
-        # can ever resolve — skip the loop entirely. One fused agg per
-        # side answers emptiness AND the length bound in a single job;
-        # the (already-filtered) candidate side persists so the
-        # per-round band joins don't rescan the source.
-        remaining = _track(unseen.filter(F.col("_nq").isNotNull()))
-        n_rem, max_q = remaining.agg(
-            F.count(F.lit(1)), F.max(F.length("_nq"))
-        ).first()
-        if n_rem == 0:
-            return empty
-        if prepared is not None:
-            # candidate side is static across calls: its filtered frame
-            # and stats were computed once up front (lifetime owned by
-            # the caller's registry, NOT released here)
-            matchable = prepared.matchable
-            n_cand, max_c = prepared.n_cand, prepared.max_c
-        else:
-            matchable = _track(c.filter(F.col("_nc").isNotNull()))
-            n_cand, max_c = matchable.agg(
-                F.count(F.lit(1)), F.max(F.length("_nc"))
-            ).first()
-        if n_cand == 0:
-            return empty
-
-        # Upper bound on ANY remaining distance: dist(q, c) <=
-        # max(|q|, |c|) <= max observed normalized length. Once the
-        # escalated width reaches it, the band covers every pair and a
-        # FULL-DP round is guaranteed to resolve every remaining probe
-        # — so the loop terminates without the blind 8-round tail, and
-        # the broadcast-nested-loop remainder below is reachable only
-        # when the bound exceeds 2^rounds * 2t.
-        bound = max(max_q or 0, max_c or 0)
-
-        wf = Window.partitionBy("probe_id")
-        parts: list[DataFrame] = []
-        width = max(2 * t, 2)
-        if n_rem * n_cand <= _FALLBACK_SMALL_PRODUCT:
-            # tiny remainder: one exact round beats the doubling ladder
-            width = max(bound, 2)
-        # One action per round, not two: the round's fused agg counts
-        # rows AND distinct resolved probes, so the remainder size is
-        # known arithmetically (a probe either resolves with its full
-        # tie set in a round or emits nothing) — no separate job to
-        # count the anti-join. The anti-join parent stays cached one
-        # extra round (`prev`) so the NEXT round's action materializes
-        # the (persisted) remainder against cached inputs, never from
-        # lineage back to the source join.
-        prev: DataFrame | None = None
-        for _ in range(_FALLBACK_MAX_ROUNDS):
-            final = width >= bound
-            pairs = _bucketed_band_pairs(remaining, matchable, width, broadcast_cand)
-            scored = pairs.withColumn(
-                "dist",
-                (
-                    F.levenshtein("_nq", "_nc")
-                    if final
-                    else F.levenshtein("_nq", "_nc", width)
-                ).cast("long"),
-            )
-            if not final:
-                scored = scored.filter(F.col("dist") >= 0)
-            part = (
-                scored.withColumn("_min", F.min("dist").over(wf))
-                .filter(F.col("dist") == F.col("_min"))
-                .withColumn("tier", F.lit("poor"))
-                .select(*OUT_COLS)
-            )
-            part = _track(part)
-            part_n, resolved = part.agg(
-                F.count(F.lit(1)), F.count_distinct("probe_id")
-            ).first()
-            if _FALLBACK_DEBUG:  # pragma: no cover - diagnostics only
-                import sys as _sys
-                import time as _time
-
-                print(
-                    f"[fuzzy-fallback] width={width} final={final} "
-                    f"n_rem={n_rem} part_n={part_n} resolved={resolved} "
-                    f"t={_time.time():.2f}",
-                    file=_sys.stderr,
-                )
-            parts.append(part)
-            # this action materialized `remaining`; its parent can go
-            if prev is not None:
-                prev.unpersist()
-                prev = None
-            if final:
-                # the band covered every pair and the DP was exact:
-                # every remaining probe resolved this round
-                break
-            if part_n == 0:
-                # zero pairs kept: EVERY remaining distance exceeds the
-                # width — a disjoint probe domain. Jump straight to the
-                # guaranteed-final bound round instead of doubling
-                # through widths that will also keep nothing.
-                width = max(bound, 2)
-                continue
-            n_rem -= resolved
-            if n_rem == 0:
-                break
-            nxt = _track(
-                remaining.join(part.select("probe_id").distinct(), "probe_id", "left_anti")
-            )
-            prev = remaining
-            remaining = nxt
-            width = min(width * 2, max(bound, 2))
-        else:
-            # capped remainder: broadcast the (small) surviving probe
-            # side so the nested loop is map-side over candidates —
-            # never a shuffled CartesianProduct
-            fb = matchable.crossJoin(F.broadcast(remaining))
-            parts.append(
-                fb.withColumn("dist", F.levenshtein("_nq", "_nc").cast("long"))
-                .withColumn("_min", F.min("dist").over(wf))
-                .filter(F.col("dist") == F.col("_min"))
-                .withColumn("tier", F.lit("poor"))
-                .select(*OUT_COLS)
-            )
-
-        out = empty
-        for part in parts:
-            out = out.unionByName(part)
-        # truncate lineage so the result survives the unpersist of every
-        # internal cache (the rows are the tiny fallback tie set)
-        return out.localCheckpoint(eager=True)
-    finally:
-        _release()
-
-
-def topk_fuzzy_join(
-    probe: DataFrame,
-    cand: DataFrame,
-    k: int = 3,
-    probe_id: str = "probe_id",
-    probe_val: str = "probe",
-    cand_id: str = "cand_id",
-    cand_val: str = "cand",
-    init_width: int = 8,
-    broadcast_cand: bool = True,
-    prepared: PreparedCandidates | None = None,
-) -> DataFrame:
-    """Exact top-k nearest candidates per probe by (edit distance,
-    cand_id) — O2 top-k-with-ties generalized from the tiered join's
-    global argmin, WITHOUT the cross join.
-
-    Same escalating-band scheme as ``_global_argmin_escalating``
-    (which is the k=1 all-ties case): round at width W scores only the
-    |len(nq)-len(nc)| <= W bucket pairs with the threshold DP
-    ``levenshtein(a, b, W)``. Every candidate outside the band or
-    rejected by the DP has dist > W; every survivor has dist <= W. So
-    if a probe has >= k survivors, its k-th smallest survivor distance
-    d_k <= W < any non-survivor distance — the round's top-k by
-    (dist, cand_id) is the GLOBAL top-k, finalized. Probes with fewer
-    than k survivors roll into the doubled width; the round at
-    W >= max normalized length covers every pair with a full DP, so
-    every probe resolves (probes with < k candidates total emit all of
-    them there).
-
-    Each round is a hash equi-join on a length bucket — at 100x data
-    this stays a shuffled (or broadcast) hash join per round, never the
-    O(P*C) full-DP cross product the naive rank() formulation pays.
-
-    Returns probe_id, probe, cand_id, cand, dist (long), rnk (long,
-    rank by (dist, cand_id) — dense since cand_id is unique).
-    Result rows are localCheckpoint-ed; every internal cache is
-    released before returning (same contract as the tiered fallback).
-    """
-    spark = probe.sparkSession
-    from pyspark.sql import types as T
-
-    p = _prep(probe, probe_id, probe_val, "probe_id", "probe", "_nq")
-    c = prepared.c if prepared is not None else _prep(
-        cand, cand_id, cand_val, "cand_id", "cand", "_nc"
-    )
-
-    out_cols = ["probe_id", "probe", "cand_id", "cand", "dist", "rnk"]
-
-    # Dense path (r18 optimization — the tiered join's dense gate,
-    # applied to top-k): when the candidate count is KNOWN (stats
-    # precomputed by the caller) and broadcast-small, the escalation
-    # ladder is all overhead — 2 stats aggregations, a persisted
-    # band-join round with its own action, and an eager localCheckpoint
-    # per call, where ONE broadcast nested-loop full-DP pass + ONE rank
-    # window is exactly the oracle's formulation and builds zero jobs
-    # (the plan stays lazy until the caller's action). Identical
-    # results: the ladder's exact final round scores the same full DP
-    # and the same (dist, cand_id) rank; probes/candidates whose
-    # normalized key is null are excluded on both paths. Scale
-    # contract: |probes| x n_cand DPs, bounded by the broadcast-small
-    # cap — above _DENSE_CAND_MAX the ladder below runs unchanged.
-    if prepared is not None and prepared.n_cand <= _DENSE_CAND_MAX:
-        wr = Window.partitionBy("probe_id").orderBy("dist", "cand_id")
-        return (
-            p.filter(F.col("_nq").isNotNull())
-            .crossJoin(F.broadcast(prepared.matchable))
-            .withColumn("dist", F.levenshtein("_nq", "_nc").cast("long"))
-            .withColumn("rnk", F.rank().over(wr).cast("long"))
-            .filter(F.col("rnk") <= k)
-            .select(*out_cols)
-        )
-    schema = T.StructType(
-        [
-            p.schema["probe_id"],
-            p.schema["probe"],
+            probes.schema["probe_id"],
+            probes.schema["probe"],
             c.schema["cand_id"],
             c.schema["cand"],
             T.StructField("dist", T.LongType()),
@@ -762,110 +562,171 @@ def topk_fuzzy_join(
         return df
 
     try:
-        remaining = _track(p.filter(F.col("_nq").isNotNull()))
-        n_rem, max_q = remaining.agg(
-            F.count(F.lit(1)), F.max(F.length("_nq"))
-        ).first()
+        remaining, n_rem, max_q = _matchable(probes, "_nq", internal)
         if n_rem == 0:
             return empty
-        if prepared is not None:
+        if isinstance(cand, PreparedCandidates):
             # caller-owned persisted frame + precomputed stats: not
             # _track-ed (the registry that created it unpersists it)
-            matchable = prepared.matchable
-            n_cand, max_c = prepared.n_cand, prepared.max_c
+            matchable, n_cand, max_c = cand.matchable, cand.n_cand, cand.max_c
         else:
-            matchable = _track(c.filter(F.col("_nc").isNotNull()))
-            n_cand, max_c = matchable.agg(
-                F.count(F.lit(1)), F.max(F.length("_nc"))
-            ).first()
+            matchable, n_cand, max_c = _matchable(c, "_nc", internal)
         if n_cand == 0:
             return empty
-        # dist(q, c) <= max(|q|, |c|): a round at this width is exact
-        # and covers every pair — the guaranteed-final round
-        bound = max(max_q or 0, max_c or 0)
 
-        wr = Window.partitionBy("probe_id").orderBy("dist", "cand_id")
+        # Upper bound on ANY remaining distance: dist(q, c) <=
+        # max(|q|, |c|) <= max observed normalized length. Once the
+        # escalated width reaches it, the band covers every pair and a
+        # FULL-DP round is guaranteed to resolve every remaining probe
+        # — so the loop terminates without the blind 8-round tail, and
+        # the broadcast-nested-loop remainder below is reachable only
+        # when the bound exceeds 2^rounds * the start width.
+        bound = max(max_q or 0, max_c or 0, 2)
+
+        wr = Window.partitionBy("probe_id").orderBy(*order)
         wp = Window.partitionBy("probe_id")
         parts: list[DataFrame] = []
-        width = max(init_width, 2)
+        width = max(width, 2)
         if n_rem * n_cand <= _FALLBACK_SMALL_PRODUCT:
             # tiny remainder: one exact round beats the doubling ladder
-            width = max(bound, 2)
+            width = bound
+        # One action per round, not two: the round's fused agg counts
+        # rows AND distinct resolved probes, so the remainder size is
+        # known arithmetically (a probe either resolves with its full
+        # top-k in a round or emits nothing) — no separate job to
+        # count the anti-join. The anti-join parent stays cached one
+        # extra round (`prev`) so the NEXT round's action materializes
+        # the (persisted) remainder against cached inputs, never from
+        # lineage back to the source join.
         prev: DataFrame | None = None
         for _ in range(_FALLBACK_MAX_ROUNDS):
             final = width >= bound
             pairs = _bucketed_band_pairs(remaining, matchable, width, broadcast_cand)
-            scored = pairs.withColumn(
-                "dist",
-                (
-                    F.levenshtein("_nq", "_nc")
-                    if final
-                    else F.levenshtein("_nq", "_nc", width)
-                ).cast("long"),
-            )
-            if not final:
-                scored = scored.filter(F.col("dist") >= 0)
-            ranked = scored.withColumn("rnk", F.rank().over(wr).cast("long")).withColumn(
-                "_n", F.count(F.lit(1)).over(wp)
-            )
-            resolved_pred = (
-                F.lit(True) if final else F.col("_n") >= F.lit(k)
-            )
-            part = _track(
-                ranked.filter(resolved_pred & (F.col("rnk") <= k)).select(*out_cols)
-            )
-            # one action per round (see _global_argmin_escalating): the
-            # fused agg yields the row count AND how many probes
-            # resolved, so the remainder size is known without a
-            # second job over the anti-join; the parent cache is held
-            # one extra round so the next action materializes the
-            # persisted remainder against cached inputs
+            ranked = _ranked(pairs, None if final else width, wr)
+            keep = F.col("rnk") <= k
+            # a probe resolves once it has k survivors; at k=1 every
+            # survivor qualifies, so the count window is skipped
+            if not final and k > 1:
+                ranked = ranked.withColumn("_n", F.count(F.lit(1)).over(wp))
+                keep = keep & (F.col("_n") >= k)
+            part = _track(ranked.filter(keep).select(*_TOPK_COLS))
             part_n, resolved = part.agg(
                 F.count(F.lit(1)), F.count_distinct("probe_id")
             ).first()
             parts.append(part)
+            # this action materialized `remaining`; its parent can go
             if prev is not None:
                 prev.unpersist()
                 prev = None
             if final:
+                # the band covered every pair and the DP was exact:
+                # every remaining probe resolved this round
                 break
             if part_n == 0:
-                # nothing reached k survivors: skip widths that would
-                # also fall short and go straight to the exact round
-                width = max(bound, 2)
+                # no probe resolved: every remaining k-th distance
+                # exceeds the width (at k=1, a disjoint probe domain).
+                # Jump straight to the guaranteed-final bound round
+                # instead of doubling through widths that also fall
+                # short.
+                width = bound
                 continue
             n_rem -= resolved
             if n_rem == 0:
                 break
             nxt = _track(
-                remaining.join(
-                    part.select("probe_id").distinct(), "probe_id", "left_anti"
-                )
+                remaining.join(part.select("probe_id").distinct(), "probe_id", "left_anti")
             )
             prev = remaining
             remaining = nxt
-            width = min(width * 2, max(bound, 2))
+            width = min(width * 2, bound)
         else:
-            # capped remainder (unreachable unless bound > 2^8 *
-            # init_width): exact scan with the small probe side
-            # broadcast — map-side nested loop, never a shuffled
-            # CartesianProduct
+            # capped remainder: broadcast the (small) surviving probe
+            # side so the nested loop is map-side over candidates —
+            # never a shuffled CartesianProduct
             fb = matchable.crossJoin(F.broadcast(remaining))
-            parts.append(
-                fb.withColumn("dist", F.levenshtein("_nq", "_nc").cast("long"))
-                .withColumn("rnk", F.rank().over(wr).cast("long"))
-                .filter(F.col("rnk") <= k)
-                .select(*out_cols)
-            )
+            parts.append(_ranked(fb, None, wr).filter(F.col("rnk") <= k).select(*_TOPK_COLS))
 
         out = empty
         for part in parts:
             out = out.unionByName(part)
+        # truncate lineage so the result survives the unpersist of every
+        # internal cache (the rows are tiny: top-k of ladder probes only)
         return out.localCheckpoint(eager=True)
     finally:
         for df in internal:
             df.unpersist()
-        internal.clear()
+
+
+def _ranked(pairs: DataFrame, width: int | None, wr: WindowSpec) -> DataFrame:
+    """Score ``pairs`` with the threshold DP at ``width`` (dropping
+    pairs beyond it), or with the exact DP when ``width`` is None, and
+    rank them per probe over ``wr``."""
+    if width is None:
+        scored = pairs.withColumn("dist", F.levenshtein("_nq", "_nc").cast("long"))
+    else:
+        scored = pairs.withColumn(
+            "dist", F.levenshtein("_nq", "_nc", width).cast("long")
+        ).filter(F.col("dist") >= 0)
+    return scored.withColumn("rnk", F.rank().over(wr).cast("long"))
+
+
+def topk_fuzzy_join(
+    probe: DataFrame,
+    cand: DataFrame | PreparedCandidates,
+    k: int = 3,
+    probe_id: str = "probe_id",
+    probe_val: str = "probe",
+    cand_id: str = "cand_id",
+    cand_val: str = "cand",
+    broadcast_cand: bool = True,
+) -> DataFrame:
+    """Exact top-k nearest candidates per probe by (edit distance,
+    cand_id) — O2 top-k-with-ties generalized from the tiered join's
+    global argmin, WITHOUT the cross join.
+
+    Runs the same escalating-band ladder as the tiered join's ``poor``
+    fallback (``_escalating_topk``, starting at width 8), ordered by
+    (dist, cand_id). Each round is a hash equi-join on a length bucket —
+    at 100x data this stays a shuffled (or broadcast) hash join per
+    round, never the O(P*C) full-DP cross product the naive rank()
+    formulation pays.
+
+    ``cand`` is a DataFrame or the ``PreparedCandidates`` of
+    ``prepare_candidates``. Returns probe_id, probe, cand_id, cand,
+    dist (long), rnk (long, rank by (dist, cand_id) — dense since
+    cand_id is unique).
+    """
+    p = _prep(probe, probe_id, probe_val, "probe_id", "probe", "_nq")
+    prepared = cand if isinstance(cand, PreparedCandidates) else None
+    c = prepared.c if prepared else _prep(cand, cand_id, cand_val, "cand_id", "cand", "_nc")
+
+    # Dense path (r18 optimization — the tiered join's dense gate,
+    # applied to top-k): when the candidate count is KNOWN (stats
+    # precomputed by the caller) and broadcast-small, the escalation
+    # ladder is all overhead — 2 stats aggregations, a persisted
+    # band-join round with its own action, and an eager localCheckpoint
+    # per call, where ONE broadcast nested-loop full-DP pass + ONE rank
+    # window is exactly the oracle's formulation and builds zero jobs
+    # (the plan stays lazy until the caller's action). Identical
+    # results: the ladder's exact final round scores the same full DP
+    # and the same (dist, cand_id) rank; probes/candidates whose
+    # normalized key is null are excluded on both paths. Scale
+    # contract: |probes| x n_cand DPs, bounded by the broadcast-small
+    # cap — above _DENSE_CAND_MAX the ladder below runs unchanged.
+    if prepared is not None and prepared.n_cand <= _DENSE_CAND_MAX:
+        wr = Window.partitionBy("probe_id").orderBy("dist", "cand_id")
+        pairs = p.filter(F.col("_nq").isNotNull()).crossJoin(
+            F.broadcast(prepared.matchable)
+        )
+        return _ranked(pairs, None, wr).filter(F.col("rnk") <= k).select(*_TOPK_COLS)
+    return _escalating_topk(
+        p,
+        prepared or c,
+        width=8,
+        broadcast_cand=broadcast_cand,
+        order=("dist", "cand_id"),
+        k=k,
+    )
 
 
 def fuzzy_match_summary(tiers: DataFrame) -> DataFrame:

@@ -135,26 +135,22 @@ def fuzzy_join_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     /root/reference/main.py:197 and config.ini:13).
 
     r18 (optimization): the candidate stats are computed up front
-    (``prepare_candidates``) so the operator's dense one-pass path can
-    fire when the measured candidate count is broadcast-small — the
-    distinct part-name catalog is tiny at every harness SF, and the
-    two-phase banded plan plus the escalating ``poor`` fallback then
-    cost ~20 extra scheduler jobs per call (measured: 22 build jobs /
-    ~2.8 s of the fallback loop vs ~0.4 s for the dense action at
-    sf0.1). Results are identical by construction — the dense path is
-    the same all-four-tiers formulation the oracle states, and the
-    streaming row has hash-matched this exact oracle through it since
-    r9. At a SF where the name catalog outgrows _DENSE_CAND_MAX the
+    (``prepare_candidates``, passed as ``cand``) so the operator's dense
+    one-pass path can fire when the measured candidate count is
+    broadcast-small — the distinct part-name catalog is tiny at every
+    harness SF, and the two-phase banded plan plus the escalating
+    ``poor`` fallback then cost ~20 extra scheduler jobs per call
+    (measured: 22 build jobs / ~2.8 s of the fallback loop vs ~0.4 s
+    for the dense action at sf0.1). Results are identical by
+    construction — the dense path is the same all-four-tiers
+    formulation the oracle states, and the streaming row has
+    hash-matched this exact oracle through it since r9. At a SF where the name catalog outgrows _DENSE_CAND_MAX the
     gate routes back to the banded two-phase plan automatically."""
-    prepared = prepare_candidates(
-        _part_cands(spark, sf_dir), cache_registry=CACHES
-    )
     return tiered_fuzzy_join(
         _part_probes(spark, sf_dir),
-        _part_cands(spark, sf_dir),
+        prepare_candidates(_part_cands(spark, sf_dir), cache_registry=CACHES),
         threshold=3,
         cache_registry=CACHES,
-        prepared=prepared,
     )
 
 
@@ -254,24 +250,20 @@ def fuzzy_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulation's plan dies at 100x).
 
     r18 (optimization): candidate stats are computed up front
-    (``prepare_candidates``, same as the flagship) so the operator's
-    dense broadcast path fires for the broadcast-small name catalog —
-    the escalation ladder's 2 stats aggregations + persisted round +
-    eager localCheckpoint cost ~16 build jobs per call where the dense
-    plan builds zero. Above _DENSE_CAND_MAX the ladder runs
-    unchanged."""
+    (``prepare_candidates`` passed as ``cand``, same as the flagship) so
+    the operator's dense broadcast path fires for the broadcast-small
+    name catalog — the escalation ladder's 2 stats aggregations +
+    persisted round + eager localCheckpoint cost ~16 build jobs per
+    call where the dense plan builds zero. Above _DENSE_CAND_MAX the
+    ladder runs unchanged."""
     part = load_table(spark, sf_dir, "part")
     names = part.groupBy("p_name").agg(F.min("p_partkey").alias("name_id"))
     probes = names.select(
         F.col("name_id").cast("long").alias("probe_id"),
         F.expr("substring(p_name, 2)").alias("probe"),
     )
-    prepared = prepare_candidates(
-        _part_cands(spark, sf_dir), cache_registry=CACHES
-    )
-    return topk_fuzzy_join(
-        probes, _part_cands(spark, sf_dir), k=3, prepared=prepared
-    )
+    cands = prepare_candidates(_part_cands(spark, sf_dir), cache_registry=CACHES)
+    return topk_fuzzy_join(probes, cands, k=3)
 
 
 # ---------------------------------------------------------------------------

@@ -535,13 +535,14 @@ def fuzzy_match_stream(
     The candidate side is STATIC across the stream's lifetime, so its
     normalization, null-filter, and the escalation fallback's fused
     count/max-length stats are computed ONCE here (prepare_candidates)
-    before the stream starts — each epoch's tiered join reuses the
-    persisted frames and scalar stats instead of re-running ~2 extra
-    candidate-side jobs per micro-batch. Pass ``cache_registry`` (a
-    list) to take ownership of the two prepared-candidate cached
-    tables (unpersist them after the stream stops); WITHOUT a registry
-    the function owns them and unpersists on the query's termination
-    event, so short-lived callers can't leak cached blocks by default.
+    before the stream starts — each epoch's tiered join takes them as
+    its ``cand``, reusing the persisted frames and scalar stats instead
+    of re-running ~2 extra candidate-side jobs per micro-batch. Pass
+    ``cache_registry`` (a list) to take ownership of the two
+    prepared-candidate cached tables (unpersist them after the stream
+    stops); WITHOUT a registry the function owns them and unpersists on
+    the query's termination event, so short-lived callers can't leak
+    cached blocks by default.
 
     Returns the started StreamingQuery (caller drives/stops it). With
     ``available_now`` the trigger drains everything available then
@@ -563,8 +564,7 @@ def fuzzy_match_stream(
         # never accumulate across a long-running stream
         reg: list = []
         tiers = tiered_fuzzy_join(
-            batch_df, cand, threshold=threshold, cache_registry=reg,
-            prepared=prepared,
+            batch_df, prepared, threshold=threshold, cache_registry=reg
         )
         try:
             # epoch-keyed overwrite, not blind append: foreachBatch is

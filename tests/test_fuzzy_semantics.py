@@ -171,30 +171,90 @@ def _brute_topk(probe_rows, cand_rows, k):
     return out
 
 
-def test_topk_matches_brute_force(spark):
+TOPK_PROBES = [(1, "almond blue"), (2, "xqzzwv"), (3, "a"), (4, "chocolate lace grand")]
+TOPK_CANDS = [
+    (10, "almond blue!"),
+    (11, "almond blues"),
+    (12, "Almond Blue"),
+    (13, "chocolate lace grande"),
+    (14, "mmmmmmmmmmmmmmmmmmmmmmmmmmmmmm"),
+    (15, "b"),
+]
+
+
+@pytest.mark.parametrize("ladder", [False, True], ids=["one_round", "ladder"])
+def test_topk_matches_brute_force(spark, monkeypatch, ladder):
     """Escalating-band top-k must equal the full-rank answer on a mixed
     corpus: near matches (resolve in round 1), far-only probes (force
-    escalation), and length outliers (cross band buckets)."""
-    from data_finder_comparator_spark.operators.fuzzy_join import topk_fuzzy_join
+    escalation), and length outliers (cross band buckets). The
+    ``ladder`` case disables the small-product shortcut so width
+    doubling and the anti-join remainder run instead of one exact
+    round."""
+    from data_finder_comparator_spark.operators import fuzzy_join as fj
 
-    probes = [(1, "almond blue"), (2, "xqzzwv"), (3, "a"), (4, "chocolate lace grand")]
-    cands = [
-        (10, "almond blue!"),
-        (11, "almond blues"),
-        (12, "Almond Blue"),
-        (13, "chocolate lace grande"),
-        (14, "mmmmmmmmmmmmmmmmmmmmmmmmmmmmmm"),
-        (15, "b"),
-    ]
+    if ladder:
+        monkeypatch.setattr(fj, "_FALLBACK_SMALL_PRODUCT", 0)
     got = {
         (r.probe_id, r.cand_id, r.dist, r.rnk)
-        for r in topk_fuzzy_join(
-            spark.createDataFrame(probes, "probe_id long, probe string"),
-            spark.createDataFrame(cands, "cand_id long, cand string"),
+        for r in fj.topk_fuzzy_join(
+            spark.createDataFrame(TOPK_PROBES, "probe_id long, probe string"),
+            spark.createDataFrame(TOPK_CANDS, "cand_id long, cand string"),
             k=3,
         ).collect()
     }
-    assert got == _brute_topk(probes, cands, 3)
+    assert got == _brute_topk(TOPK_PROBES, TOPK_CANDS, 3)
+
+
+@pytest.mark.parametrize("mode", ["tiered", "topk"])
+def test_ladder_cap_remainder_matches_brute_force(spark, monkeypatch, mode):
+    """One capped round, then the broadcast nested-loop scan of the
+    probes still unresolved: the result must equal brute force, and the
+    remainder's plan must be map-side over candidates, never a shuffled
+    CartesianProduct."""
+    from data_finder_comparator_spark.operators import fuzzy_join as fj
+
+    monkeypatch.setattr(fj, "_FALLBACK_SMALL_PRODUCT", 0)
+    monkeypatch.setattr(fj, "_FALLBACK_MAX_ROUNDS", 1)
+    if mode == "tiered":
+        # 'cold w' resolves in the first round (global min 5 <= 2t);
+        # the x-run is farther than 2t from everything
+        probes = PROBES + [(20, "cold w"), (21, "x" * 20)]
+        probe = spark.createDataFrame(probes, "probe_id long, probe string")
+        cand = spark.createDataFrame(CANDS, "cand_id long, cand string")
+    else:
+        probe = spark.createDataFrame(TOPK_PROBES, "probe_id long, probe string")
+        cand = spark.createDataFrame(TOPK_CANDS, "cand_id long, cand string")
+    # the ladder's result is localCheckpoint-ed: read the plan it
+    # checkpoints, which holds every round and the remainder scan
+    plans: list[str] = []
+    cls = type(probe)
+    checkpoint = cls.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", spy)
+    if mode == "tiered":
+        got = {
+            (r.probe_id, r.cand_id, r.tier)
+            for r in fj.tiered_fuzzy_join(probe, cand, threshold=3).collect()
+        }
+        want = {
+            (pid, cid, tier)
+            for pid, q in probes
+            for cid, tier in reference_tiers(q, CANDS, 3)
+        }
+    else:
+        got = {
+            (r.probe_id, r.cand_id, r.dist, r.rnk)
+            for r in fj.topk_fuzzy_join(probe, cand, k=3).collect()
+        }
+        want = _brute_topk(TOPK_PROBES, TOPK_CANDS, 3)
+    assert got == want
+    assert len(plans) == 1
+    assert "BroadcastNestedLoopJoin" in plans[0], plans[0]
+    assert "CartesianProduct" not in plans[0], plans[0]
 
 
 def test_topk_fewer_candidates_than_k(spark):
@@ -221,17 +281,8 @@ def test_topk_dense_prepared_path_matches_brute_force(spark):
         topk_fuzzy_join,
     )
 
-    probes = [(1, "almond blue"), (2, "xqzzwv"), (3, "a"), (4, "chocolate lace grand")]
-    cands = [
-        (10, "almond blue!"),
-        (11, "almond blues"),
-        (12, "Almond Blue"),
-        (13, "chocolate lace grande"),
-        (14, "mmmmmmmmmmmmmmmmmmmmmmmmmmmmmm"),
-        (15, "b"),
-    ]
     cand_df = spark.createDataFrame(
-        cands + [(99, None)], "cand_id long, cand string"
+        TOPK_CANDS + [(99, None)], "cand_id long, cand string"
     )
     reg: list = []
     prepared = prepare_candidates(cand_df, cache_registry=reg)
@@ -240,17 +291,16 @@ def test_topk_dense_prepared_path_matches_brute_force(spark):
             (r.probe_id, r.cand_id, r.dist, r.rnk)
             for r in topk_fuzzy_join(
                 spark.createDataFrame(
-                    probes + [(9, None)], "probe_id long, probe string"
+                    TOPK_PROBES + [(9, None)], "probe_id long, probe string"
                 ),
-                cand_df,
+                prepared,
                 k=3,
-                prepared=prepared,
             ).collect()
         }
     finally:
         for df in reg:
             df.unpersist()
-    assert got == _brute_topk(probes, cands, 3)
+    assert got == _brute_topk(TOPK_PROBES, TOPK_CANDS, 3)
     assert not any(pid == 9 or cid == 99 for pid, cid, _, _ in got)
 
 
@@ -270,9 +320,7 @@ def test_dense_prepared_path_matches_reference(spark):
     reg: list = []
     prepared = prepare_candidates(cand, cache_registry=reg)
     try:
-        got = tiered_fuzzy_join(
-            probe, cand, threshold=3, prepared=prepared
-        ).collect()
+        got = tiered_fuzzy_join(probe, prepared, threshold=3).collect()
     finally:
         for df in reg:
             df.unpersist()
@@ -288,31 +336,42 @@ def test_dense_prepared_path_matches_reference(spark):
         assert r.dist == _lev(r.probe, r.cand)
 
 
-def test_dense_path_gated_on_candidate_count(spark):
-    """Above _DENSE_CAND_MAX the prepared path must still take the
-    banded two-phase plan (the dense cross product is only the right
-    trade under the broadcast-small cap)."""
+@pytest.mark.parametrize("mode", ["tiered", "topk"])
+def test_dense_path_gated_on_candidate_count(spark, monkeypatch, mode):
+    """Above _DENSE_CAND_MAX prepared candidates must still take the
+    banded plan — the tiered join's two phases, top-k's ladder — since
+    the dense cross product is only the right trade under the
+    broadcast-small cap."""
     from data_finder_comparator_spark.operators import fuzzy_join as fj
 
+    monkeypatch.setattr(fj, "_DENSE_CAND_MAX", 0)
     probe = spark.createDataFrame(PROBES, "probe_id long, probe string")
     cand = spark.createDataFrame(CANDS, "cand_id long, cand string")
     reg: list = []
     prepared = fj.prepare_candidates(cand, cache_registry=reg)
-    old = fj._DENSE_CAND_MAX
-    fj._DENSE_CAND_MAX = 0  # force the banded path even though prepared
     try:
-        got = fj.tiered_fuzzy_join(
-            probe, cand, threshold=3, prepared=prepared
-        ).collect()
+        if mode == "tiered":
+            got = {
+                (r.probe_id, r.cand_id, r.tier)
+                for r in fj.tiered_fuzzy_join(probe, prepared, threshold=3).collect()
+            }
+        else:
+            got = {
+                (r.probe_id, r.cand_id, r.dist, r.rnk)
+                for r in fj.topk_fuzzy_join(probe, prepared, k=3).collect()
+            }
     finally:
-        fj._DENSE_CAND_MAX = old
         for df in reg:
             df.unpersist()
-    want = set()
-    for pid, q in PROBES:
-        for cid, tier in reference_tiers(q, CANDS, 3):
-            want.add((pid, cid, tier))
-    assert {(r.probe_id, r.cand_id, r.tier) for r in got} == want
+    if mode == "tiered":
+        want = {
+            (pid, cid, tier)
+            for pid, q in PROBES
+            for cid, tier in reference_tiers(q, CANDS, 3)
+        }
+    else:
+        want = _brute_topk(PROBES, CANDS, 3)
+    assert got == want
 
 
 def test_tier_semantics_qgram_dedup_strings(spark):

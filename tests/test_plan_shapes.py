@@ -49,23 +49,41 @@ def test_fuzzy_flagship_no_cartesian(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_poor_fallback_never_cartesian(spark):
+def _lev(a: str, b: str) -> int:
+    prev = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        cur = [i]
+        for j, cb in enumerate(b, 1):
+            cur.append(min(prev[j] + 1, cur[-1] + 1, prev[j - 1] + (ca != cb)))
+        prev = cur
+    return prev[-1]
+
+
+@pytest.mark.parametrize("ladder", [False, True], ids=["one_round", "ladder"])
+def test_poor_fallback_never_cartesian(spark, monkeypatch, ladder):
     """Adversarial probe set (disjoint catalog: every probe falls
     through to the poor fallback) must resolve via escalating band
     equi-joins — no CartesianProduct and no nested-loop join anywhere
-    in the executed plan for the non-broadcast strategy."""
-    from data_finder_comparator_spark.operators.fuzzy_join import tiered_fuzzy_join
+    in the executed plan for the non-broadcast strategy. The ``ladder``
+    case disables the small-product shortcut, so the first round keeps
+    nothing and the ladder jumps straight to its bound."""
+    from data_finder_comparator_spark.operators import fuzzy_join as fj
 
-    probe = spark.createDataFrame(
-        [(i, f"xq{i:02d}wvzzkjhp") for i in range(20)], "probe_id long, probe string"
-    )
-    cand = spark.createDataFrame(
-        [(i, f"aa{i % 7}bbbbcccc") for i in range(50)], "cand_id long, cand string"
-    )
-    out = tiered_fuzzy_join(probe, cand, threshold=3, strategy="band")
+    if ladder:
+        monkeypatch.setattr(fj, "_FALLBACK_SMALL_PRODUCT", 0)
+    probes = [(i, f"xq{i:02d}wvzzkjhp") for i in range(20)]
+    cands = [(i, f"aa{i % 7}bbbbcccc") for i in range(50)]
+    probe = spark.createDataFrame(probes, "probe_id long, probe string")
+    cand = spark.createDataFrame(cands, "cand_id long, cand string")
+    out = fj.tiered_fuzzy_join(probe, cand, threshold=3, strategy="band")
     rows = out.collect()
-    # every probe resolved with a poor tier (global argmin found)
-    assert {r.probe_id for r in rows if r.tier == "poor"} == set(range(20))
+    # every probe resolved with its poor tier: the brute-force global
+    # argmin ties (keys are already normalized)
+    want = set()
+    for pid, q in probes:
+        dists = {cid: _lev(q, c) for cid, c in cands}
+        want |= {(pid, cid, d, "poor") for cid, d in dists.items() if d == min(dists.values())}
+    assert {(r.probe_id, r.cand_id, r.dist, r.tier) for r in rows} == want
     plan = _executed_plan(out)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -310,7 +328,7 @@ def test_dense_fuzzy_path_minimal_plan(spark):
     reg: list = []
     prepared = prepare_candidates(cand, cache_registry=reg)
     try:
-        out = tiered_fuzzy_join(probe, cand, threshold=3, prepared=prepared)
+        out = tiered_fuzzy_join(probe, prepared, threshold=3)
         out.count()  # finalize the adaptive plan before reading it
         plan = _executed_plan(out)
     finally:

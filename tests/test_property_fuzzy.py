@@ -171,9 +171,7 @@ def test_dense_prepared_matches_brute_force(spark, probe_keys, cand_keys, t):
     try:
         got = {
             (r.probe_id, r.cand_id, r.dist, r.tier)
-            for r in tiered_fuzzy_join(
-                p_df, c_df, threshold=t, prepared=prepared
-            ).collect()
+            for r in tiered_fuzzy_join(p_df, prepared, threshold=t).collect()
         }
     finally:
         for df in reg:
